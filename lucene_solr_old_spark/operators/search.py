@@ -1,14 +1,29 @@
 """Query execution: the reference's scorer algebra as DataFrame plans.
 
+Every term query — one query or a whole workload — runs through ONE front
+end and one of two scoring plans (LCJoin/Koios: a batch of set queries is
+a filtered join against the inverted index; a single query is a batch of
+one):
+
+  * parser            -> :func:`parse_queries`: ``[(qid, text, mode)]`` ->
+    clause rows ``(qid, term, mult, required)``
+  * query table       -> the clause rows as ONE constant map literal
+    ``term -> [(qid, weight, mult, required)]``, probed once per
+    (segment, term) postings row (a broadcast join without a broadcast job)
+  * relational plan   -> :func:`_match_frame` ``(qid, seg, docid, score)``;
+    the block-max plan (``wand.py``) produces the same frame
+  * collectors        -> :func:`_top` (one query) and :func:`_top_per_query`
+    (a batch)
+
 Mapping (SURVEY.md §2.5, §2.7):
 
   * TermQuery/TermScorer        -> filter postings to term, explode, score
     (``search/TermQuery.java:161``, ``TermScorer.java:27-96``)
-  * BooleanQuery SHOULD (OR)    -> union of per-term score frames +
-    groupBy(doc).sum  — term-at-a-time, exactly BooleanScorer's bucket
+  * BooleanQuery SHOULD (OR)    -> groupBy(doc).sum over the per-clause
+    term scores — term-at-a-time, exactly BooleanScorer's bucket
     accumulation (``search/BooleanScorer.java:61,143-156``); coord == 1 for
     BM25 so disjunction score is a plain sum (``Similarity.java:122-124``)
-  * BooleanQuery MUST (AND)     -> same frames + HAVING count(distinct term)
+  * BooleanQuery MUST (AND)     -> same aggregate + HAVING matched clauses
     == n  (the leapfrog ConjunctionScorer's semantics,
     ``ConjunctionScorer.java:28-120`` — Catalyst's hash aggregate replaces
     the merge)
@@ -22,7 +37,8 @@ Mapping (SURVEY.md §2.5, §2.7):
     freq feeds BM25 with summed idf (``BM25Similarity.idfExplain[]``)
   * top-k collector             -> ORDER BY score DESC, key ASC LIMIT k —
     Catalyst's TakeOrderedAndProject is the per-leaf PQ + merge
-    (``TopScoreDocCollector.java:54-61``; ties favor lower doc order)
+    (``TopScoreDocCollector.java:54-61``; ties favor lower doc order); a
+    batch ranks per qid with a window
   * searchAfter                 -> WHERE (score,key) < (after) then top-k
     (``IndexSearcher.java:234-250``)
 
@@ -36,10 +52,11 @@ only reproducible up to addition order; ranks are tie-broken by doc key.
 
 from __future__ import annotations
 
+import json
 import math
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions.bm25 import Bm25Stats
 from ..functions.smallfloat import byte315_to_float
@@ -47,9 +64,9 @@ from ..functions.tokenizer import get_analyzer
 from .indexer import InvertedIndex
 
 __all__ = [
-    "term_score_frame", "phrase_score_frame", "search_terms", "search_or",
-    "search_and", "search_dismax", "search_phrase", "count_query",
-    "search_after", "ngram_phrase_search",
+    "parse_queries", "term_score_frame", "phrase_score_frame",
+    "search_terms", "search_or", "search_and", "search_dismax",
+    "search_phrase", "count_query", "search_after", "ngram_phrase_search",
 ]
 
 
@@ -67,20 +84,35 @@ def _qtokens(index: InvertedIndex, query_text: str):
     return get_analyzer(index.analyzer)(query_text)
 
 
-def _cache_array(stats: Bm25Stats) -> Column:
-    """256-entry float32 norm-factor cache as a Spark array literal.
+def parse_queries(index: InvertedIndex, queries: list[tuple],
+                  min_should_match: int = 0) -> list[tuple]:
+    """The query front end: ``[(qid, text, mode)]`` (mode "OR"/"AND") ->
+    clause rows ``(qid, term, mult, required)``.
 
-    Built as ONE array literal + an array<float> cast rather than 256
-    per-element ``lit().cast()`` calls: each Column call is a py4j round
-    trip, and the per-element form cost ~0.5s of driver time PER QUERY
-    construction.  Element values are identical (double -> float32 cast
-    per element either way)."""
-    return F.lit([float(c) for c in stats.cache]).cast("array<float>")
+    A repeated term is a repeated BooleanQuery CLAUSE (``BooleanQuery.java``
+    clause list: "a a b" scores a twice): ``mult`` scales the term's score
+    and counts toward ``required``, the matched clauses a hit needs — all
+    of them for AND, ``min_should_match`` (at least one) for OR
+    (``MinShouldMatchSumScorer.java:36``).  A query with no analyzed term
+    yields no rows, so every plan built over it is empty."""
+    analyzer = get_analyzer(index.analyzer)
+    clauses = []
+    for qid, text, mode in queries:
+        terms = [t.term for t in analyzer(text)]
+        required = (len(terms) if mode.upper() == "AND"
+                    else max(1, min_should_match))
+        clauses += [(qid, t, terms.count(t), required)
+                    for t in sorted(set(terms))]
+    return clauses
 
 
-def _norm_factor(stats: Bm25Stats) -> Column:
-    # element_at is 1-based; norm byte is 0..255
-    return F.element_at(_cache_array(stats), F.col("norm") + 1)
+def _json_lit(value, ddl: str) -> Column:
+    """A constant of type ``ddl`` built in ONE py4j call: the value travels
+    as a JSON string literal and ``from_json`` is constant-folded at
+    planning.  ``F.lit(list)`` makes one call per element: ~0.13 s of
+    driver time per query for the 256-entry norm cache on a 4-core VM.
+    Doubles round-trip exactly (``repr`` -> Jackson)."""
+    return F.from_json(F.lit(json.dumps(value)), ddl)
 
 
 # --- float64 "oracle precision" variant ------------------------------------
@@ -133,20 +165,11 @@ class _Scorer:
             self._sqltype = "float"
 
     def norm_factor(self) -> Column:
-        # single array literal + cast — see _cache_array for why
-        arr = F.lit([float(c) for c in self._cache]).cast(
+        # element_at is 1-based; norm byte is 0..255.  Parsed as doubles and
+        # cast, exactly like a per-element double literal + cast.
+        arr = _json_lit(self._cache, "array<double>").cast(
             f"array<{self._sqltype}>")
         return F.element_at(arr, F.col("norm") + 1)
-
-    def weight_map(self) -> Column:
-        return F.create_map(*[
-            x for t, w in self._weights.items()
-            for x in (F.lit(t), F.lit(w).cast(self._sqltype))
-        ])
-
-    def score_col(self) -> Column:
-        freq = F.col("freq").cast(self._sqltype)
-        return (self.weight_map()[F.col("term")] * freq) / (freq + self.norm_factor())
 
     def phrase_weight(self) -> float:
         """Summed idf * (k1+1), accumulated in this precision, term order."""
@@ -161,92 +184,144 @@ class _Scorer:
         return float(s32 * (self.stats.k1 + np.float32(1.0)))
 
 
+_QUERY_TABLE = ("map<string, array<struct<qid:int, weight:double, "
+                "mult:int, required:int>>>")
+
+
+def _term_rows(index: InvertedIndex, clauses: list[tuple],
+               precision: str = "float32",
+               boost: float = 1.0) -> tuple[DataFrame, _Scorer]:
+    """(seg, term, docid, freq, norm, qid, weight, mult, required, score):
+    one row per (posting, clause) — the postings scan joined to the query
+    table.
+
+    score = weightValue * freq / (freq + cache[norm])
+    (``BM25Similarity.java:233-238``), weightValue per-term from global df,
+    NOT yet scaled by the clause multiplicity.  The query table is a map
+    literal probed once per (segment, term) row, so one query and a batch
+    share one plan shape and neither pays a job to broadcast it."""
+    terms = sorted({t for _q, t, _m, _r in clauses})
+    scorer = _Scorer(index, terms, precision, boost)
+    table: dict[str, list] = {}
+    for qid, t, mult, required in clauses:
+        table.setdefault(t, []).append({
+            "qid": qid, "weight": scorer._weights[t], "mult": mult,
+            "required": required})
+    freq = F.col("freq").cast(scorer._sqltype)
+    rows = (
+        index.postings.where(F.col("term").isin(terms))
+        .select("seg", "term",
+                _json_lit(table, _QUERY_TABLE)[F.col("term")].alias("q"),
+                F.explode("postings").alias("p"))
+        .select("seg", "term",
+                F.col("p.docid").alias("docid"),
+                F.col("p.freq").alias("freq"),
+                F.col("p.norm").alias("norm"),
+                F.inline("q"))
+        .withColumn("score", (F.col("weight").cast(scorer._sqltype) * freq)
+                    / (freq + scorer.norm_factor()))
+    )
+    return rows, scorer
+
+
 def term_score_frame(index: InvertedIndex, terms: list[str],
                      boost: float = 1.0,
                      precision: str = "float32") -> tuple[DataFrame, _Scorer]:
-    """(seg, docid, term, freq, norm, score) for every posting of ``terms``.
+    """(seg, docid, term, freq, norm, score) for every posting of ``terms``
+    (each distinct term once)."""
+    rows, scorer = _term_rows(index, [(0, t, 1, 1) for t in set(terms)],
+                              precision, boost)
+    return rows.select("seg", "docid", "term", "freq", "norm", "score"), scorer
 
-    score = weightValue * freq / (freq + cache[norm])
-    (``BM25Similarity.java:233-238``), weightValue per-term from global df.
-    """
-    scorer = _Scorer(index, terms, precision, boost)
-    matched = index.postings.where(F.col("term").isin(list(set(terms))))
-    exploded = matched.select(
-        "seg", "term",
-        F.explode("postings").alias("p"),
-    ).select(
-        "seg", "term",
-        F.col("p.docid").alias("docid"),
-        F.col("p.freq").alias("freq"),
-        F.col("p.norm").alias("norm"),
-    )
-    scored = exploded.withColumn("score", scorer.score_col())
-    return scored, scorer
+
+def _no_hits(index: InvertedIndex, precision: str = "float32") -> DataFrame:
+    """The empty (qid, seg, docid, score) frame — the plan of a query with
+    no analyzed term.  ``limit(0)`` folds to an empty relation at planning,
+    so every plan above it is empty without a job."""
+    return index.docmeta.select(
+        F.lit(0).alias("qid"), "seg", "docid",
+        F.lit(0.0).cast("double" if precision == "float64" else "float")
+        .alias("score")).limit(0)
+
+
+def _match_frame(index: InvertedIndex, clauses: list[tuple],
+                 precision: str = "float32",
+                 tie_breaker: float | None = None) -> DataFrame:
+    """The relational scoring plan: (qid, seg, docid, score) for every hit
+    of every query in ``clauses`` (:func:`parse_queries` rows) — one
+    postings scan, one aggregate, BooleanQuery semantics: each clause adds
+    its term score ``mult`` times, and a hit needs ``required`` matched
+    clauses.  With ``tie_breaker`` the clauses are DisjunctionMaxQuery
+    disjuncts instead: max(sub) + tie * (sum(sub) - max(sub))."""
+    if not clauses:
+        return _no_hits(index, precision)
+    rows, scorer = _term_rows(index, clauses, precision)
+    score = F.sum(F.col("score") * F.col("mult").cast(scorer._sqltype))
+    if tie_breaker is not None:
+        score = F.max("score") + F.lit(tie_breaker) * (score - F.max("score"))
+    agg = rows.groupBy("qid", "required", "seg", "docid").agg(
+        score.alias("score"), F.sum("mult").alias("nmatched"))
+    return (agg.where(F.col("nmatched") >= F.col("required"))
+            .select("qid", "seg", "docid", "score"))
+
+
+def _with_keys(per_doc: DataFrame, index: InvertedIndex) -> DataFrame:
+    """Late materialization: join back doc keys (the PURPOSE_GET_FIELDS
+    second round of SURVEY.md §3.3)."""
+    return per_doc.join(index.docmeta.select("seg", "docid", "key"),
+                        ["seg", "docid"])
+
+
+def _top(hits: DataFrame, k: int, precision: str = "float32",
+         after: tuple | None = None) -> DataFrame:
+    """One-query collector over (key, score): top-k (key, score), strictly
+    after the ``(score, key)`` cursor when one is given."""
+    score = F.col("score").cast("double" if precision == "float64"
+                                else "float")
+    if after is not None:
+        hits = hits.where((score < F.lit(after[0])) | (
+            (score == F.lit(after[0])) & (F.col("key") > F.lit(after[1]))))
+    return (hits.select("key", score.alias("score"))
+            .orderBy(F.desc("score"), F.asc("key"))
+            .limit(k))
 
 
 def _topk(per_doc: DataFrame, index: InvertedIndex, k: int,
           precision: str = "float32") -> DataFrame:
-    """Collector: join back doc keys (late materialization — the
-    PURPOSE_GET_FIELDS second round of SURVEY.md §3.3) and take top-k."""
-    stype = "double" if precision == "float64" else "float"
-    with_keys = per_doc.join(
-        index.docmeta.select("seg", "docid", "key"), ["seg", "docid"])
-    return (
-        with_keys.select("key", F.col("score").cast(stype).alias("score"))
-        .orderBy(F.desc("score"), F.asc("key"))
-        .limit(k)
-    )
+    """Collector over a (seg, docid, score) frame: keys + top-k."""
+    return _top(_with_keys(per_doc, index), k, precision)
+
+
+def _top_per_query(per_doc: DataFrame, index: InvertedIndex, k: int,
+                   precision: str = "float32") -> DataFrame:
+    """Batch collector: (qid, rank, key, score), top-k per qid — the
+    per-shard/leaf top-k heap as a window row_number."""
+    score = F.col("score").cast("double" if precision == "float64"
+                                else "float")
+    w = Window.partitionBy("qid").orderBy(score.desc(), F.asc("key"))
+    return (_with_keys(per_doc, index)
+            .withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("qid", "rank", "key", score.alias("score"))
+            .orderBy("qid", "rank"))
 
 
 def search_terms(index: InvertedIndex, query_text: str, mode: str = "OR",
                  k: int = 10, min_should_match: int = 0,
                  exclude_text: str | None = None,
                  precision: str = "float32") -> DataFrame:
-    """Analyze ``query_text`` with the same chain as indexing (Lucene parses
-    queries through the index analyzer), then run OR/AND with optional
-    MUST_NOT and minimum-should-match. Returns top-k (key, score)."""
-    terms = _qterms(index, query_text)
-    if not terms:
-        return index.docmeta.select(
-            F.col("key"), F.lit(0.0).cast("float").alias("score")).limit(0)
-    scored, _ = term_score_frame(index, terms, precision=precision)
-
-    # BooleanQuery scores a repeated term ONCE PER CLAUSE (each duplicate is
-    # its own TermQuery clause: "a a b" doubles a's contribution) and counts
-    # CLAUSES for AND / minNrShouldMatch (``BooleanQuery.java`` clause list;
-    # ``MinShouldMatchSumScorer.java:36``).  Weight each distinct term's
-    # score and match-count by its multiplicity; multiplicity-1 queries keep
-    # the plain plan.
-    mult = {t: terms.count(t) for t in set(terms)}
-    if any(m > 1 for m in mult.values()):
-        mcol = F.create_map(*[x for t, m in mult.items()
-                              for x in (F.lit(t), F.lit(m))])
-        scored = scored.withColumn(
-            "score", F.col("score") * mcol[F.col("term")].cast(
-                "double" if precision == "float64" else "float"))
-        agg = scored.groupBy("seg", "docid").agg(
-            F.sum("score").alias("score"),
-            F.sum(mcol[F.col("term")]).alias("nmatched"),
+    """OR/AND with optional MUST_NOT and minimum-should-match: a batch of
+    one through the relational plan. Returns top-k (key, score)."""
+    agg = _match_frame(index, parse_queries(
+        index, [(0, query_text, mode)], min_should_match), precision)
+    ex_terms = _qterms(index, exclude_text) if exclude_text else []
+    if ex_terms:
+        ex_docs = (
+            index.postings.where(F.col("term").isin(ex_terms))
+            .select("seg", F.explode("postings.docid").alias("docid"))
+            .distinct()
         )
-    else:
-        agg = scored.groupBy("seg", "docid").agg(
-            F.sum("score").alias("score"),
-            F.count_distinct("term").alias("nmatched"),
-        )
-    if mode.upper() == "AND":
-        agg = agg.where(F.col("nmatched") == len(terms))
-    elif min_should_match > 1:
-        agg = agg.where(F.col("nmatched") >= min_should_match)
-
-    if exclude_text:
-        ex_terms = _qterms(index, exclude_text)
-        if ex_terms:
-            ex_docs = (
-                index.postings.where(F.col("term").isin(ex_terms))
-                .select("seg", F.explode("postings.docid").alias("docid"))
-                .distinct()
-            )
-            agg = agg.join(ex_docs, ["seg", "docid"], "left_anti")
+        agg = agg.join(ex_docs, ["seg", "docid"], "left_anti")
     return _topk(agg, index, k, precision)
 
 
@@ -264,30 +339,17 @@ def search_dismax(index: InvertedIndex, query_text: str, k: int = 10,
                   tie_breaker: float = 0.0,
                   precision: str = "float32") -> DataFrame:
     """score = max(sub) + tie * (sum(sub) - max(sub))
-    (``search/DisjunctionMaxQuery.java``)."""
-    terms = _qterms(index, query_text)
-    scored, _ = term_score_frame(index, terms, precision=precision)
-    agg = scored.groupBy("seg", "docid").agg(
-        (F.max("score")
-         + F.lit(tie_breaker) * (F.sum("score") - F.max("score"))).alias("score"))
-    return _topk(agg, index, k, precision)
+    (``search/DisjunctionMaxQuery.java``); a repeated disjunct counts in
+    the sum once per clause."""
+    hits = _match_frame(index, parse_queries(index, [(0, query_text, "OR")]),
+                        precision, tie_breaker)
+    return _topk(hits, index, k, precision)
 
 
 def count_query(index: InvertedIndex, query_text: str, mode: str = "OR") -> int:
     """TotalHitCountCollector (``search/TotalHitCountCollector.java``)."""
-    terms = _qterms(index, query_text)
-    if not terms:
-        return 0
-    matched = (
-        index.postings.where(F.col("term").isin(terms))
-        .select("seg", F.explode("postings.docid").alias("docid"),
-                F.col("term"))
-    )
-    grouped = matched.groupBy("seg", "docid").agg(
-        F.count_distinct("term").alias("nmatched"))
-    if mode.upper() == "AND":
-        grouped = grouped.where(F.col("nmatched") == len(set(terms)))
-    return grouped.count()
+    return _match_frame(index, parse_queries(
+        index, [(0, query_text, mode)])).count()
 
 
 def search_after(index: InvertedIndex, query_text: str, k: int,
@@ -295,25 +357,10 @@ def search_after(index: InvertedIndex, query_text: str, k: int,
                  mode: str = "OR", precision: str = "float32") -> DataFrame:
     """Cursor pagination: hits strictly after (score, key) in rank order
     (``search/IndexSearcher.java:234-250,351-416``)."""
-    # over-fetch then filter — the frame is lazy so only the filter survives
-    terms = _qterms(index, query_text)
-    scored, _ = term_score_frame(index, terms, precision=precision)
-    agg = scored.groupBy("seg", "docid").agg(
-        F.sum("score").alias("score"),
-        F.count_distinct("term").alias("nmatched"))
-    if mode.upper() == "AND":
-        agg = agg.where(F.col("nmatched") == len(set(terms)))
-    with_keys = agg.join(index.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
-    cast = F.col("score").cast("double" if precision == "float64" else "float")
-    after = (cast < F.lit(after_score)) | (
-        (cast == F.lit(after_score)) & (F.col("key") > F.lit(after_key)))
-    return (
-        with_keys.where(after)
-        .select("key", cast.alias("score"))
-        .orderBy(F.desc("score"), F.asc("key"))
-        .limit(k)
-    )
+    hits = _match_frame(index, parse_queries(index, [(0, query_text, mode)]),
+                        precision)
+    return _top(_with_keys(hits, index), k, precision,
+                after=(after_score, after_key))
 
 
 def search_phrase(index: InvertedIndex, phrase_text: str, k: int = 10,
@@ -532,19 +579,11 @@ def custom_score_search(index: InvertedIndex, query_text: str,
     when it is a small dim table; here it joins on the doc key AFTER the
     per-term scoring aggregate (so the join input is |matching docs|, not
     |postings|)."""
-    terms = _qterms(index, query_text)
-    if not terms:
-        return index.docmeta.select(
-            "key", F.lit(0.0).cast("float").alias("score")).limit(0)
-    stype = "double" if precision == "float64" else "float"
-    scored, _ = term_score_frame(index, terms, precision=precision)
-    agg = scored.groupBy("seg", "docid").agg(F.sum("score").alias("score"))
-    with_keys = agg.join(index.docmeta.select("seg", "docid", "key"),
-                         ["seg", "docid"])
-    boosted = with_keys.join(boosts, "key").select(
-        "key",
-        (F.col("score") * F.col(boost_col)).cast(stype).alias("score"))
-    return boosted.orderBy(F.desc("score"), F.asc("key")).limit(k)
+    hits = _match_frame(index, parse_queries(index, [(0, query_text, "OR")]),
+                        precision)
+    boosted = _with_keys(hits, index).join(boosts, "key").withColumn(
+        "score", F.col("score") * F.col(boost_col))
+    return _top(boosted, k, precision)
 
 
 def rescore(index: InvertedIndex, first_query: str, second_query: str,
@@ -556,30 +595,15 @@ def rescore(index: InvertedIndex, first_query: str, second_query: str,
     firstPassScore + weight * secondPassScore when it matches), re-sort,
     return top-``k``.
 
-    The second pass scores ONLY the n retained docs (a join against the
-    top-n frame, which is broadcastable for any practical n) — the
-    expensive query never touches the full corpus, which is the entire
-    point of rescoring at 100 TB."""
+    The second pass joins against the top-n frame (broadcastable for any
+    practical n), so only the n retained docs are combined and ranked."""
     stype = "double" if precision == "float64" else "float"
     first = search_terms(index, first_query, mode, k=n,
-                         precision=precision) \
-        .withColumnRenamed("score", "first_score")
-    terms2 = _qterms(index, second_query)
-    if not terms2:
-        return (first.select("key",
-                             F.col("first_score").alias("score"))
-                .orderBy(F.desc("score"), F.asc("key")).limit(k))
-    scored2, _ = term_score_frame(index, terms2, precision=precision)
-    per_doc2 = (scored2.groupBy("seg", "docid")
-                .agg(F.sum("score").alias("second_score"))
-                .join(index.docmeta.select("seg", "docid", "key"),
-                      ["seg", "docid"])
-                .select("key", "second_score"))
-    combined = (first.join(per_doc2, "key", "left")
-                .select("key",
-                        (F.col("first_score")
-                         + F.lit(weight).cast(stype)
-                         * F.coalesce(F.col("second_score"),
-                                      F.lit(0.0).cast(stype)))
-                        .cast(stype).alias("score")))
-    return combined.orderBy(F.desc("score"), F.asc("key")).limit(k)
+                         precision=precision)
+    second = _with_keys(_match_frame(
+        index, parse_queries(index, [(0, second_query, "OR")]), precision),
+        index).select("key", F.col("score").alias("second_score"))
+    combined = first.join(second, "key", "left").withColumn(
+        "score", F.col("score") + F.lit(weight).cast(stype)
+        * F.coalesce(F.col("second_score"), F.lit(0.0).cast(stype)))
+    return _top(combined, k, precision)

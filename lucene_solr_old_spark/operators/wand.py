@@ -30,10 +30,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.bm25 import Bm25Stats
-from ..functions.tokenizer import get_analyzer
 from .codec import decode_block
 from .indexer import InvertedIndex
+from .search import (_no_hits, _Scorer, _top_per_query, _topk,
+                     parse_queries)
 
 __all__ = ["wand_search", "batch_wand_search"]
 
@@ -187,70 +187,72 @@ def _conjunctive_kernel(term_rows, weights, cache, k, mults=None,
     return cand, scores
 
 
+def _blockmax_frame(index: InvertedIndex, clauses: list[tuple], k: int,
+                    precision: str = "float32") -> DataFrame:
+    """The block-max scoring plan: (qid, seg, docid, score), each query's
+    per-segment top-k for every query in ``clauses`` (``parse_queries``
+    rows).  One term-pruned scan of the union of all query terms, then ONE
+    applyInPandas per segment runs every query's kernel against that
+    segment's blocks — no doc-level shuffle.  A query that needs more
+    than one matched clause (AND) runs the conjunctive kernel."""
+    if "blocks" not in index.postings.columns:
+        raise ValueError("block-max search requires a compressed index")
+    if not clauses:
+        return _no_hits(index, precision)
+    scorer = _Scorer(index, sorted({t for _q, t, _m, _r in clauses}),
+                     precision)
+    dtype = np.float64 if precision == "float64" else np.float32
+    cache = np.asarray(scorer._cache, dtype=dtype)
+    weights = {t: dtype(w) for t, w in scorer._weights.items()}
+    queries: dict = {}                # qid -> ({term: mult}, required)
+    for qid, t, mult, required in clauses:
+        queries.setdefault(qid, ({}, required))[0][t] = mult
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        seg = int(pdf["seg"].iloc[0])
+        by_term = {r.term: list(r.blocks)
+                   for r in pdf.itertuples(index=False)}
+        out_q, out_d, out_s = [], [], []
+        for qid, (mults, required) in queries.items():
+            rows = [(t, by_term[t]) for t in sorted(mults) if t in by_term]
+            if required > 1:
+                if len(rows) < len(mults):  # a term absent in this segment
+                    continue
+                d, s = _conjunctive_kernel(rows, weights, cache, k, mults,
+                                           dtype)
+            elif rows:
+                d, s = _disjunctive_kernel(rows, weights, cache, k, mults,
+                                           dtype)
+            else:
+                continue
+            if d.size > k:
+                # per-segment top-k (ties -> lower docid): sort by (-score, docid)
+                order = np.lexsort((d, -s))[:k]
+                d, s = d[order], s[order]
+            out_q.append(np.full(d.size, qid, dtype=np.int32))
+            out_d.append(d.astype(np.int32))
+            out_s.append(s.astype(dtype))
+        return pd.DataFrame({
+            "qid": np.concatenate(out_q or [np.zeros(0, np.int32)]),
+            "seg": np.full(sum(map(len, out_q)), seg, dtype=np.int32),
+            "docid": np.concatenate(out_d or [np.zeros(0, np.int32)]),
+            "score": np.concatenate(out_s or [np.zeros(0, dtype)]),
+        })
+
+    return (index.postings.where(F.col("term").isin(sorted(weights)))
+            .select("seg", "term", "blocks")
+            .groupBy("seg")
+            .applyInPandas(kernel, schema="qid INT, seg INT, docid INT, "
+                           f"score {scorer._sqltype.upper()}"))
+
+
 def wand_search(index: InvertedIndex, query_text: str, k: int = 10,
                 mode: str = "OR", precision: str = "float32") -> DataFrame:
     """Top-k (key, score) via the block-max kernel. Requires a compressed
     index (indexer.compress_index)."""
-    if "blocks" not in index.postings.columns:
-        raise ValueError("wand_search requires a compressed index")
-    terms = [t.term for t in get_analyzer(index.analyzer)(query_text)]
-    if not terms:
-        return index.docmeta.select(
-            "key", F.lit(0.0).cast("float").alias("score")).limit(0)
-    mults = {t: terms.count(t) for t in set(terms)}  # clause multiplicity
-    terms = sorted(set(terms))
-    max_doc, sum_ttf = index.collection_stats()
-    stats = Bm25Stats(max_doc, sum_ttf)
-    tstats = index.term_stats(terms)
-    if precision == "float64":
-        # oracle-precision twin: same norm quantization, float64 math in
-        # fixed order so ANSI SQL reproduces the kernel's scores (the gate
-        # hash-compares values instead of a rows-only check)
-        from .search import cache64, idf64
-        avgdl = sum_ttf / max_doc if max_doc else 1.0
-        weights = {t: idf64(tstats.get(t, (0, 0))[0], max_doc) * 2.2
-                   for t in terms}
-        cache = np.array(cache64(avgdl), dtype=np.float64)
-        dtype = np.float64
-    else:
-        weights = {t: stats.weight_value(tstats.get(t, (0, 0))[0])
-                   for t in terms}
-        cache = stats.cache
-        dtype = np.float32
-    conj = mode.upper() == "AND"
-    n_terms = len(terms)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(pdf["seg"].iloc[0])
-        term_rows = [(r.term, list(r.blocks))
-                     for r in pdf.itertuples(index=False)]
-        if conj:
-            if len(term_rows) < n_terms:  # some term absent in this segment
-                return pd.DataFrame({"seg": [], "docid": [], "score": []})
-            d, s = _conjunctive_kernel(term_rows, weights, cache, k,
-                                       mults, dtype)
-        else:
-            d, s = _disjunctive_kernel(term_rows, weights, cache, k,
-                                       mults, dtype)
-        if d.size > k:
-            # per-segment top-k (ties -> lower docid): sort by (-score, docid)
-            order = np.lexsort((d, -s))[:k]
-            d, s = d[order], s[order]
-        return pd.DataFrame({
-            "seg": np.full(d.size, seg, dtype=np.int32),
-            "docid": d.astype(np.int32),
-            "score": s.astype(dtype),
-        })
-
-    matched = index.postings.where(F.col("term").isin(terms))
-    stype = "DOUBLE" if precision == "float64" else "FLOAT"
-    per_seg = matched.select("seg", "term", "blocks").groupBy("seg").applyInPandas(
-        kernel, schema=f"seg INT, docid INT, score {stype}")
-    out = per_seg.join(index.docmeta.select("seg", "docid", "key"),
-                       ["seg", "docid"])
-    return (out.select("key", "score")
-            .orderBy(F.desc("score"), F.asc("key"))
-            .limit(k))
+    frame = _blockmax_frame(
+        index, parse_queries(index, [(0, query_text, mode)]), k, precision)
+    return _topk(frame, index, k, precision)
 
 
 def batch_wand_search(index: InvertedIndex, queries: list[tuple],
@@ -258,76 +260,10 @@ def batch_wand_search(index: InvertedIndex, queries: list[tuple],
     """Whole query workload through the block-max kernel in ONE job.
 
     queries: [(qid, query_text, mode)] with mode in {"OR", "AND"}.
-    Returns (qid, rank, key, score).
-
-    Plan: one term-pruned scan of the union of all query terms; ONE
-    applyInPandas per segment runs every query's kernel against that
-    segment's blocks (per-segment top-k), then a per-qid window merges
-    leaves — the per-query Spark scheduling floor is amortized across the
-    workload exactly like operators/batch.py, but with MaxScore block
-    skipping instead of the relational aggregation."""
-    if "blocks" not in index.postings.columns:
-        raise ValueError("batch_wand_search requires a compressed index")
-    analyzer = get_analyzer(index.analyzer)
-    qinfo: list[tuple] = []           # (qid, [terms], mults, conj)
-    all_terms: set[str] = set()
-    for qid, text, mode in queries:
-        terms = [t.term for t in analyzer(text)]
-        if not terms:
-            continue
-        mults = {t: terms.count(t) for t in set(terms)}
-        qinfo.append((qid, sorted(set(terms)), mults,
-                      mode.upper() == "AND"))
-        all_terms.update(terms)
-    if not qinfo:
-        return index.docmeta.sparkSession.createDataFrame(
-            [], "qid INT, rank INT, key STRING, score FLOAT")
-    max_doc, sum_ttf = index.collection_stats()
-    stats = Bm25Stats(max_doc, sum_ttf)
-    tstats = index.term_stats(sorted(all_terms))
-    weights = {t: stats.weight_value(tstats.get(t, (0, 0))[0])
-               for t in all_terms}
-    cache = stats.cache
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(pdf["seg"].iloc[0])
-        by_term = {r.term: list(r.blocks)
-                   for r in pdf.itertuples(index=False)}
-        out_q, out_d, out_s = [], [], []
-        for qid, terms, mults, conj in qinfo:
-            rows = [(t, by_term[t]) for t in terms if t in by_term]
-            if not rows:
-                continue
-            if conj:
-                if len(rows) < len(terms):
-                    continue
-                d, s = _conjunctive_kernel(rows, weights, cache, k, mults)
-            else:
-                d, s = _disjunctive_kernel(rows, weights, cache, k, mults)
-            if d.size > k:
-                order = np.lexsort((d, -s))[:k]
-                d, s = d[order], s[order]
-            out_q.extend([qid] * d.size)
-            out_d.extend(d.tolist())
-            out_s.extend(s.tolist())
-        return pd.DataFrame({
-            "qid": np.asarray(out_q, dtype=np.int32),
-            "seg": np.full(len(out_q), seg, dtype=np.int32),
-            "docid": np.asarray(out_d, dtype=np.int32),
-            "score": np.asarray(out_s, dtype=np.float32),
-        })
-
-    matched = index.postings.where(F.col("term").isin(sorted(all_terms)))
-    per_seg = (matched.select("seg", "term", "blocks")
-               .groupBy("seg")
-               .applyInPandas(kernel,
-                              schema="qid INT, seg INT, docid INT, "
-                                     "score FLOAT"))
-    from pyspark.sql import Window
-    with_keys = per_seg.join(index.docmeta.select("seg", "docid", "key"),
-                             ["seg", "docid"])
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("key"))
-    return (with_keys.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("qid", "rank", "key", "score")
-            .orderBy("qid", "rank"))
+    Returns (qid, rank, key, score): the per-segment top-k of every query,
+    merged per qid by the batch collector — the per-query Spark scheduling
+    floor is amortized across the workload exactly like
+    operators/batch.py, but with MaxScore block skipping instead of the
+    relational aggregation."""
+    frame = _blockmax_frame(index, parse_queries(index, queries), k)
+    return _top_per_query(frame, index, k)

@@ -1,16 +1,18 @@
-"""batch_search == per-query search results, in one job."""
+"""batch_search == the brute-force oracle per query, in one job."""
 
 import pytest
+from test_index_search import PyOracle
 
-from lucene_solr_old_spark.operators import search as S
 from lucene_solr_old_spark.operators.batch import batch_search
 from lucene_solr_old_spark.operators.indexer import build_index
 from lucene_solr_old_spark.sources.pages import PAGES_SCHEMA, gen_pages
 
+CORPUS = gen_pages(250, seed=3)
+
 
 @pytest.fixture(scope="module")
 def idx(spark):
-    df = spark.createDataFrame(gen_pages(250, seed=3), schema=PAGES_SCHEMA)
+    df = spark.createDataFrame(CORPUS, schema=PAGES_SCHEMA)
     return build_index(df, num_segments=4).persist()
 
 
@@ -25,15 +27,15 @@ QUERIES = [
 
 
 def test_batch_matches_individual(idx):
+    oracle = PyOracle(CORPUS)
     batch = batch_search(idx, QUERIES, k=10)
     by_qid = {}
     for r in batch.collect():
         by_qid.setdefault(r["qid"], []).append(
             (r["rank"], r["key"], round(float(r["score"]), 5)))
     for qid, text, mode in QUERIES:
-        single = S.search_terms(idx, text, mode=mode, k=10)
-        exp = [(i + 1, r["key"], round(float(r["score"]), 5))
-               for i, r in enumerate(single.collect())]
+        exp = [(i + 1, key, round(score, 5)) for i, (key, score)
+               in enumerate(oracle.topk(text, k=10, mode=mode))]
         got = sorted(by_qid.get(qid, []))
         assert got == exp, (qid, text, got, exp)
 

@@ -39,3 +39,16 @@ def test_vectorized_path_unchanged_for_batches():
     ref = score_tf(s.weight_value(42, 1.0), tf,
                    s.cache[nb.astype(np.int64) & 0xFF])
     assert out.tobytes() == ref.tobytes()
+
+
+def test_one_freq_many_norm_bytes_broadcasts():
+    """A 1-element freq against several norm bytes is not the scalar case:
+    it broadcasts like score_tf (one score per norm byte)."""
+    s = Bm25Stats(5000, 90000)
+    tf = np.array([3])
+    nb = np.array([10, 118, 200])
+    out = s.score(42, tf, nb)
+    ref = score_tf(s.weight_value(42, 1.0), tf,
+                   s.cache[nb.astype(np.int64) & 0xFF])
+    assert out.shape == (3,)
+    assert out.tobytes() == ref.tobytes()

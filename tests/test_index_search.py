@@ -34,7 +34,11 @@ def index(spark, corpus):
 
 
 class PyOracle:
-    """Brute-force reference retrieval over analyzed docs (float32 BM25)."""
+    """Brute-force reference retrieval over analyzed docs (float32 BM25).
+
+    Queries are BooleanQuery clause lists: a repeated term is one clause
+    per occurrence — its float32 term score counts once per clause, and
+    AND / minimum-should-match count matched clauses."""
 
     def __init__(self, corpus):
         self.docs = {}       # url -> Counter(term)
@@ -57,13 +61,13 @@ class PyOracle:
 
     def score(self, url, terms):
         total = 0.0  # float64 accumulate, like the Spark sum, cast at end
-        for t in set(terms):
+        for t, mult in Counter(terms).items():
             tf = self.docs[url].get(t, 0)
             if tf == 0:
                 continue
             s = self.stats.score(self.df[t], np.array([tf]),
                                  np.array([doclen_to_norm(self.doclen[url])]))
-            total += float(s[0])
+            total += float(s[0] * np.float32(mult))  # s + s + ... in f32
         return np.float32(total)
 
     def topk(self, query, k=10, mode="OR", exclude=None, msm=0):
@@ -71,10 +75,11 @@ class PyOracle:
         ex_terms = analyze_terms(exclude) if exclude else []
         out = []
         for url, c in self.docs.items():
-            matched = sum(1 for t in set(terms) if c.get(t, 0) > 0)
+            matched = sum(m for t, m in Counter(terms).items()
+                          if c.get(t, 0) > 0)
             if matched == 0:
                 continue
-            if mode == "AND" and matched < len(set(terms)):
+            if mode == "AND" and matched < len(terms):
                 continue
             if msm and matched < msm:
                 continue
@@ -118,6 +123,7 @@ QUERIES = [
     "relational the hopeful",    # stopword mixed in (dropped by analysis)
     "zzzz notfoundterm",         # zero-hit
 ]
+REPEATED = "running meetings meetings caresses"   # "meet" is two clauses
 
 
 def test_collection_stats_match_oracle(index, oracle):
@@ -125,14 +131,14 @@ def test_collection_stats_match_oracle(index, oracle):
 
 
 def test_or_queries_rank_identical(index, oracle):
-    for q in QUERIES:
+    for q in QUERIES + [REPEATED]:
         got = rows_to_pairs(S.search_or(index, q, k=10))
         exp = oracle.topk(q, k=10, mode="OR")
         assert_rank_identical(got, exp)
 
 
 def test_and_queries(index, oracle):
-    for q in ["running meetings", "caresses ponies"]:
+    for q in ["running meetings", "caresses ponies", REPEATED]:
         got = rows_to_pairs(S.search_and(index, q, k=10))
         exp = oracle.topk(q, k=10, mode="AND")
         assert_rank_identical(got, exp)
@@ -266,6 +272,36 @@ def test_repeated_term_scores_once_per_clause(index, oracle):
                if oracle.docs[e[0]].get("caress", 0) > 0
                and oracle.docs[e[0]].get("poni", 0) > 0]
     assert [k for k, _ in got_and] == [k for k, _ in exp_and[:10]]
+
+
+def test_search_after_counts_repeated_terms(index, oracle):
+    full = oracle.topk(REPEATED, k=20)
+    assert len(full) == 20
+    page1 = rows_to_pairs(S.search_or(index, REPEATED, k=5))
+    assert_rank_identical(page1, full[:5])
+    last = page1[-1]
+    page2 = rows_to_pairs(S.search_after(index, REPEATED, 10, last[1],
+                                         last[0]))
+    assert_rank_identical(page2, full[5:15])
+
+
+def test_custom_score_counts_repeated_terms(spark, index, oracle):
+    # power-of-two boosts: scaling is exact in float32 and float64 alike
+    boost = {url: (0.5, 1.0, 2.0)[len(url) % 3] for url in oracle.docs}
+    boosts = spark.createDataFrame(list(boost.items()),
+                                   "key STRING, boost DOUBLE")
+    got = rows_to_pairs(S.custom_score_search(index, REPEATED, boosts, k=10))
+    exp = sorted(((url, float(np.float32(sc) * np.float32(boost[url])))
+                  for url, sc in oracle.topk(REPEATED, k=10 ** 9)),
+                 key=lambda x: (-x[1], x[0]))
+    assert_rank_identical(got, exp[:10])
+
+
+def test_dismax_no_analyzed_term_is_empty(index):
+    out = S.search_dismax(index, "the of and", k=10, tie_breaker=0.3)
+    assert out.dtypes == S.search_or(index, "the of and", k=10).dtypes
+    assert out.dtypes == [("key", "string"), ("score", "float")]
+    assert out.collect() == []
 
 
 def test_fused_build_identical_to_grouped(spark, corpus):

@@ -3,6 +3,7 @@ same corpus (the TestBoolean2 cross-scorer-verification analogue,
 SURVEY.md §5 #3)."""
 
 import pytest
+from test_index_search import PyOracle
 
 from lucene_solr_old_spark.operators import search as S
 from lucene_solr_old_spark.operators.indexer import build_index, compress_index
@@ -150,9 +151,10 @@ def test_kernel_randomized_vs_bruteforce():
 
 
 def test_batch_wand_matches_individual(spark, both_indexes):
-    """batch_wand_search == wand_search per query, one job."""
+    """batch_wand_search == the brute-force oracle per query, one job."""
     from lucene_solr_old_spark.operators.wand import batch_wand_search
 
+    oracle = PyOracle(gen_pages(N_DOCS, seed=11))
     _raw, cidx = both_indexes
     queries = [(0, "running meetings", "OR"), (1, "caresses ponies", "AND"),
                (2, "relational hopeful", "OR"),
@@ -163,7 +165,6 @@ def test_batch_wand_matches_individual(spark, both_indexes):
         by_qid.setdefault(r["qid"], []).append(
             (r["rank"], r["key"], round(float(r["score"]), 5)))
     for qid, text, mode in queries:
-        single = wand_search(cidx, text, k=10, mode=mode)
-        exp = [(i + 1, r["key"], round(float(r["score"]), 5))
-               for i, r in enumerate(single.collect())]
+        exp = [(i + 1, key, round(score, 5)) for i, (key, score)
+               in enumerate(oracle.topk(text, k=10, mode=mode))]
         assert sorted(by_qid.get(qid, [])) == exp, (qid, text)

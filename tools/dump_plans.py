@@ -1,4 +1,5 @@
-"""Dump .explain("formatted") for the bench's main query paths.
+"""Dump .explain("formatted") for the bench's main query paths (term,
+batch of 60 and of one, block-max single query) and build stages.
 
 Usage: python tools/dump_plans.py <out_dir> <suffix>
 Run from the repo root whose package should be measured (works unchanged
@@ -69,6 +70,16 @@ def main(out_dir: str, suffix: str) -> None:
               for _ in range(n)]
         bq.append((i, " ".join(qs), "AND" if i % 5 == 4 else "OR"))
     dump("batch_60q", batch_search(pidx, bq, k=10))
+    # a batch of one is the single-query plan with the batch collector
+    dump("batch_1q", batch_search(pidx, [(0, "running meetings", "OR")],
+                                  k=10))
+
+    from lucene_solr_old_spark.operators.indexer import compress_index
+    from lucene_solr_old_spark.operators.wand import wand_search
+    cidx = compress_index(pidx).persist()
+    cidx.postings.count()
+    dump("wand_term", wand_search(cidx, "running meetings", k=10))
+    cidx.postings.unpersist()
 
     # cleaning stack exactly as the bench composes it
     from lucene_solr_old_spark.operators import cleaning as CL
